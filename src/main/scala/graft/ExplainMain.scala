@@ -7,7 +7,9 @@ object ExplainMain {
       .config("spark.sql.shuffle.partitions","8")
       .config("spark.sql.session.timeZone","UTC")
       .config("spark.sql.adaptive.enabled","true")
-      .config("spark.ui.enabled","false").getOrCreate()
+      .config("spark.ui.enabled","false")
+      .withExtensions(new graft.plans.GraftExtensions)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.01"
     val queries = if (args.nonEmpty) args.toSeq

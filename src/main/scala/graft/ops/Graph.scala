@@ -669,8 +669,12 @@ object Graph {
       .unionByName(q.select(col("lo").as("node"))).distinct()
     var converged = false
     var round = 0
-    while (!converged && round < 20) {
+    var edges = -1L
+    while (!converged) {
       round += 1
+      // error past the cap rather than ship a half-converged labelling
+      if (round > 20) throw new IllegalStateException(
+        s"two-star labelling not converged after 20 rounds ($edges edges left)")
       // LARGE-STAR: every neighbor v of u with v > u re-attaches to
       // m(u) = min(Γ(u) ∪ {u}). Bidirect, per-node min, emit (v, m).
       val bi = cur.select(col("hi").as("u"), col("lo").as("v"))
@@ -708,7 +712,8 @@ object Graph {
       // full-frame symmetric difference: one aggregate + one
       // edge-frame semi-join count, both ∝ |edges|.
       val agg = cur.agg(count(lit(1)), countDistinct(col("hi"))).first()
-      if (agg.getLong(0) == agg.getLong(1)) {
+      edges = agg.getLong(0)
+      if (edges == agg.getLong(1)) {
         val chains = cur.select(col("lo"))
           .join(cur.select(col("hi").as("lo")), Seq("lo"), "left_semi")
           .count()

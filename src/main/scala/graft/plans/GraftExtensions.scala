@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.functions.{CdcBoundaries, CosineSim, DotProduct}
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -29,6 +30,10 @@ import org.apache.spark.sql.types.StringType
   * same tree the Scala API builds (filters above the TVF still prune
   * into it). (Programmatic callers can instead use
   * `GraftFunctions.register`.)
+  *
+  * Installing the extension also installs [[GraftExtensions.sparkDefaults]],
+  * the Spark settings under which generated code is compiled once and
+  * reused across passes and sessions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -66,6 +71,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
 
   override def apply(e: SparkSessionExtensions): Unit = {
+    GraftExtensions.installSparkDefaults(
+      org.apache.spark.sql.graft.GraftDataset.activeSparkConf)
     e.injectFunction((
       FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
@@ -116,5 +123,52 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => ApproxDistinctRewrite)
     e.injectOptimizerRule(_ => SaltSkewRewrite)
     e.injectOptimizerRule(_ => SummaryRewrite)
+  }
+}
+
+object GraftExtensions {
+
+  /** Spark defaults for every session built through the extension; a
+    * value the user sets (builder `.config`, `-D`, spark-defaults)
+    * wins.
+    *
+    *  - `spark.sql.codegen.cache.maxEntries`: Spark caches 100 compiled
+    *    classes, LRU-keyed by (context class loader, code). One pass of
+    *    the benchmark's olap workload needs about 130, so a cyclic walk
+    *    missed on every class and Janino recompiled about 265 per pass.
+    *    A full `SparkEntry` sweep at sf0.01 compiles 3,555 distinct
+    *    classes, so 4096 holds graft's whole working set: peak
+    *    metaspace over that sweep is 225 MB, against 212 MB at 2000
+    *    entries, where 350 evicted classes were compiled twice.
+    *  - `spark.sql.artifact.isolation.enabled`: on by default, it gives
+    *    every session (each `newSession()` too) its own executor class
+    *    loader, so the codegen cache, keyed on that loader, missed for
+    *    every class a fresh session ran. graft adds no session
+    *    artifacts (jars, files, REPL classes), so isolation buys it
+    *    nothing.
+    *  - `spark.sql.codegen.useIdInClassName`: AQE numbers whole-stage
+    *    codegen stages in the order their query stages complete, which
+    *    varies run to run, and the stage id in the class name made the
+    *    same pipeline a new cache key (tx48_bigram_surprise recompiled
+    *    4–14 classes a pass). Only the class name changes; plans keep
+    *    showing the stage id.
+    */
+  val sparkDefaults: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
+  /** Sets each of [[sparkDefaults]] that is unset, where the session
+    * being built will read it. `withExtensions` runs the extension
+    * before the builder makes its `SparkConf`, which loads `spark.*`
+    * JVM system properties, so with no live context the defaults go
+    * there. On the `spark.sql.extensions` route the context already
+    * exists, so they go on its conf, before `SharedState` clones it. */
+  private[graft] def installSparkDefaults(live: Option[SparkConf]): Unit = {
+    val setIfAbsent: (String, String) => Unit = live match {
+      case Some(conf) => (k, v) => conf.setIfMissing(k, v)
+      case None => (k, v) => if (System.getProperty(k) == null) System.setProperty(k, v)
+    }
+    sparkDefaults.foreach(setIfAbsent.tupled)
   }
 }

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
@@ -9,7 +10,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * code is modified.
   *
   * VERIFIED AGAINST: Spark 4.1.2 (the `classic.Dataset.ofRows` /
-  * `classic.ExpressionUtils.column` signatures are private[sql] API —
+  * `classic.ExpressionUtils.column` signatures are private[sql] API,
+  * `SparkContext.getActive` / `SparkContext.conf` private[spark] —
   * the first thing a Spark upgrade breaks silently). A compile-fence
   * spec (PropertySpec: "GraftDataset private-API bridge is pinned")
   * fails loudly on any other 4.1.x-incompatible bump so the bridge is
@@ -26,4 +28,10 @@ object GraftDataset {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression):
       org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** The live SparkContext's own conf (`SparkContext.getActive` and
+    * `SparkContext.conf` are private[spark]; the public `getConf` is a
+    * copy). A default set here before `SharedState` clones the conf
+    * reaches every session built on that context. */
+  def activeSparkConf: Option[SparkConf] = SparkContext.getActive.map(_.conf)
 }
