@@ -1,15 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev utility: dump formatted physical plans for plan-quality review. */
 object ExplainMain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.sql.adaptive.enabled","true")
-      .config("spark.ui.enabled","false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.01"
     val queries = if (args.nonEmpty) args.toSeq

@@ -1,18 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: steady-state timing of one query at sf0.1 (three runs,
-  * same session) — finer-grained than Bench when chasing a single
-  * regression. `runMain graft.TimeMain <key1[,key2,…]> [sfDir]` */
+  * same session, `SPARK_GRAFT_CPUS` cores) — finer-grained than Bench
+  * when chasing a single regression.
+  * `runMain graft.TimeMain <key1[,key2,…]> [sfDir]` */
 object TimeMain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     for (key <- args(0).split(',').map(_.trim).filter(_.nonEmpty)) {

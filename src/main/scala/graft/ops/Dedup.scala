@@ -18,6 +18,9 @@ import Checkpoints.TruncateOps
   */
 object Dedup {
 
+  /** The module's hub memo (see [[SessionMemo]]). */
+  private[graft] val memo = new SessionMemo[AnyRef]
+
   /** dd01: exact dedup — group identical normalized text, keep min id. */
   def dd01Exact(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
@@ -47,10 +50,8 @@ object Dedup {
     * sweep's single most repeated exact join. 0.5 is the lowest floor
     * any consumer reads, and every consumer's own filter re-applies on
     * top, so outputs are bit-identical to the inline derivations. */
-  private val pairs05Memo = new SessionMemo[DataFrame]
-
   private def exactPairs05(s: SparkSession, d: String): DataFrame =
-    pairs05Memo.getOrCompute(s, d)(memoLive) {
+    memo(s, "exactPairs05", d) {
       val sh = CacheScope.cached(shingles(s, d))
       val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       val a = sh.select(col("doc_id").as("d1"), col("s"))
@@ -219,11 +220,9 @@ object Dedup {
     * entry matching pay O(tree) per reference (measured: the proof
     * family's per-call driver time, not data, dominated the sweep).
     * ∝ near-dup pairs, never corpus-sized; a cache drain kills the
-    * checkpoint blocks and memoLive rebuilds from the parquet inputs. */
-  private val dd02Memo = new SessionMemo[DataFrame]
-
+    * checkpoint blocks and the memo rebuilds from the parquet inputs. */
   def dd02MinhashLsh(s: SparkSession, d: String): DataFrame =
-    dd02Memo.getOrCompute(s, d)(memoLive) {
+    memo(s, "dd02", d) {
       val sh = CacheScope.cached(shingles(s, d))
       verifiedJaccard(sh, lshCandidates(minhashSigs(sh))).truncated
     }
@@ -371,28 +370,11 @@ object Dedup {
     * graphs have tiny diameters, so this converges in a handful of
     * rounds; `localCheckpoint` truncates the growing lineage.
     */
-  private val dd06Memo = new SessionMemo[DataFrame]
-
-  /** A memoized frame stays servable only while its truncation
-    * blocks live: the convergence result is localCheckpoint-backed
-    * (lineage CUT — blocks lost means unrecoverable, not slow), and a
-    * drain (`CacheScope.unpersistAll`, Verify's per-query hygiene)
-    * unpersists them. Serve the memo only while the checkpointed RDD
-    * still holds a storage level; rebuild otherwise. */
-  private[graft] def memoLive(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.forall(_.getStorageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE)
-    // (a reliable-checkpoint frame — opt-in spark.graft.checkpointDir —
-    // reports level NONE and conservatively rebuilds; the local
-    // default keeps MEMORY_AND_DISK until a drain unpersists it)
-
   def dd06DupClusters(s: SparkSession, d: String): DataFrame = {
     // pair source is the MinHash path: identical verified pair set as
     // dd04 (so the oracle is unchanged) at a fraction of the cost —
     // at scale you never run the exact all-pairs join just to cluster.
-    // MEMOIZED per (session, dir): propagateMinLabels runs its
+    // MEMOIZED per session: propagateMinLabels runs its
     // convergence loop EAGERLY at call time and returns an
     // already-materialized (localCheckpoint-truncated) frame, so
     // CacheScope's plan-identity registration can never dedupe two
@@ -402,7 +384,7 @@ object Dedup {
     // their own; liveness-checked so a cache drain between queries
     // rebuilds instead of serving dead checkpoint blocks; the
     // convergence loop runs OUTSIDE any memo lock.
-    dd06Memo.getOrCompute(s, d)(memoLive) {
+    memo(s, "dd06", d) {
       propagateMinLabels(dd02MinhashLsh(s, d)
           .select(col("d1"), col("d2")))
         .select(col("doc").as("doc_id"), col("lbl").as("cluster_id"))
@@ -540,15 +522,12 @@ object Dedup {
   /** All discriminative-index co-shingle pairs with shared counts and
     * FULL per-doc shingle sizes — dd10 (containment) and dd24 (the
     * LSH tuner) derive from this IDENTICAL hot-capped self-join, so
-    * it is memoized per (session, dir, maxDf) as a flat frame.
+    * it is memoized per session as a flat frame.
     * Bounded by Σ_{df≤cap} df² — exactly the in-flight bound both
     * consumers already pay (see `discriminative`); each consumer's
     * own threshold re-applies on top, outputs bit-identical. */
-  private val discPairsMemo = new SessionMemo[DataFrame]
-
-  private def discPairs(s: SparkSession, d: String): DataFrame = {
-    val maxDf = s.conf.get("spark.graft.dedup.maxDf", "128").toInt
-    discPairsMemo.getOrCompute(s, s"$d#maxDf=$maxDf")(memoLive) {
+  private def discPairs(s: SparkSession, d: String): DataFrame =
+    memo(s, "discPairs", d) {
       val sh = CacheScope.cached(shingles(s, d))
       val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       val shc = discriminative(s, sh)
@@ -562,7 +541,6 @@ object Dedup {
           .withColumnRenamed("n", "n2"), Seq("d2"))
         .truncated
     }
-  }
 
   def dd10Containment(s: SparkSession, d: String): DataFrame =
     discPairs(s, d)
@@ -1220,18 +1198,16 @@ object Dedup {
     * clusters that actually carry a bridge — on a clean corpus that
     * is almost nothing, while the naive form re-propagates every
     * clique for no reason. */
-  /** MEMOIZED per (session, dir), dd06Memo's discipline (VERDICT r10
+  /** MEMOIZED per session, dd06's discipline (VERDICT r10
     * #6): the safe chain runs TWO eager convergence loops (dd06's and
     * the supported-core re-propagation) plus the wedge-support join,
     * and it now has four same-session consumers (dd27, dd28, dd36,
     * pp45's standing read) — without the memo each re-pays the whole
-    * chain. memoLive checks EVERY checkpoint block in the plan (both
+    * chain. The memo checks EVERY checkpoint block in the plan (both
     * loops' truncations), so a drained cache rebuilds instead of
     * serving dead blocks. */
-  private val safeMemo = new SessionMemo[DataFrame]
-
   private def safeMembers(s: SparkSession, d: String): DataFrame =
-    safeMemo.getOrCompute(s, d)(memoLive)(safeMembersNow(s, d))
+    memo(s, "safeMembers", d)(safeMembersNow(s, d))
 
   private def safeMembersNow(s: SparkSession, d: String): DataFrame =
     // truncated: the safe-member frame (∝ dup docs) is read by dd27,
@@ -1561,28 +1537,24 @@ object Dedup {
     * Scale: density/route frames ∝ clusters; both keeper rules are
     * the existing bounded-window terminals, and the safe chain is
     * computed once via the session memo (never per-route). */
-  /** dd36's routed policy rows, MEMOIZED per (session, dir) as a
+  /** dd36's routed policy rows, MEMOIZED per session as a
     * truncated flat frame: the policy terminal is itself a standing
     * artifact — pp50 anti-joins it on every training-set build and
     * pp51's purge patch reads its untouched rows — so the routed rows
     * (∝ clusters) materialize once per session and every consumer's
     * plan carries one flat leaf instead of the full two-keeper-rule
-    * tree. Memo key carries the conf'd threshold so a session that
-    * re-tunes the knob never reads stale routes. */
-  private val dd36Memo = new SessionMemo[DataFrame]
-
-  def dd36KeeperPolicy(s: SparkSession, d: String): DataFrame = {
-    val thr = s.conf.get(keeperDensityBpConf, "5000").toLong
-    dd36Memo.getOrCompute(s, s"$d#thr=$thr")(memoLive) {
+    * tree. The memo key carries the session's graft confs, so a
+    * session that re-tunes the threshold never reads stale routes. */
+  def dd36KeeperPolicy(s: SparkSession, d: String): DataFrame =
+    memo(s, "dd36", d) {
       policyRowsFrom(
         CacheScope.cached(dd02MinhashLsh(s, d).select(col("d1"), col("d2"))),
         dd06DupClusters(s, d),
         dd07KeepBest(s, d).select(col("cluster_id"),
           col("keeper_id"), col("n_members")),
         dd28SafeKeepBest(s, d),
-        thr).truncated
+        s.conf.get(keeperDensityBpConf, "5000").toLong).truncated
     }
-  }
 
   /** dd36's routing + selection over EXPLICIT frames — `pairs` the
     * verified edge set of the `labels` components (self-contained,

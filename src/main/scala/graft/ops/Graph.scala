@@ -14,6 +14,9 @@ import Checkpoints.TruncateOps
   */
 object Graph {
 
+  /** The module's hub memo (see [[SessionMemo]]). */
+  private val memo = new SessionMemo[AnyRef]
+
   /** Oriented (d1 < d2) verified near-dup edges. Cached: the triangle
     * query references this frame three times (and the degree query
     * twice) — without the cache each reference re-executes the whole
@@ -234,11 +237,9 @@ object Graph {
     * the columnar→row conversion; the lazily-truncated copy is one
     * row-backed ExistingRDD leaf built once per session (the dd02 memo
     * discipline; two consumers: q53 + gr16). A cache drain kills the
-    * checkpoint blocks and memoLive rebuilds from the parquet inputs. */
-  private val coEdgesFlatMemo = new SessionMemo[DataFrame]
-
+    * checkpoint blocks and the memo rebuilds from the parquet inputs. */
   private[graft] def coPurchaseEdgesFlat(s: SparkSession, d: String): DataFrame =
-    coEdgesFlatMemo.getOrCompute(s, d)(Dedup.memoLive) {
+    memo(s, "coPurchaseEdgesFlat", d) {
       Checkpoints.truncate(coPurchaseEdges(s, d))
     }
 
@@ -264,15 +265,13 @@ object Graph {
     labels.select(col("node").as("part_id"), col("lbl").as("component_id"))
   }
 
-  /** The 5-round co-purchase component labels, MEMOIZED per (session,
-    * dir): gr06 and gr10 run the IDENTICAL unroll, but its per-round
+  /** The 5-round co-purchase component labels, MEMOIZED per session:
+    * gr06 and gr10 run the IDENTICAL unroll, but its per-round
     * truncations mint fresh checkpoint RDDs every call, so plain
     * plan-identity caching never dedupes the two (the dd06 memo
     * discipline applied to the lazy fixed-unroll kernels). */
-  private val coLabelsMemo = new SessionMemo[DataFrame]
-
   private def coPurchaseLabels(s: SparkSession, d: String): DataFrame =
-    coLabelsMemo.getOrCompute(s, d)(Dedup.memoLive) {
+    memo(s, "coPurchaseLabels", d) {
       val e = coPurchaseEdges(s, d)
       val bi = CacheScope.cached(e.unionByName(
         e.select(col("dst").as("src"), col("src").as("dst"))))
@@ -777,14 +776,12 @@ object Graph {
     * Σdeg² hazard); the oracle replays the identical rule, so outputs
     * are hash-exact on any corpus. Scale: the pair expansion is
     * bounded by ≤7 items/order; per-round frames ∝ surviving edges. */
-  /** gr17's CONVERGED truss edge set, MEMOIZED per (session, dir): the
+  /** gr17's CONVERGED truss edge set, MEMOIZED per session: the
     * peel loop is eager (one count per round) and gr18 re-runs gr17's
     * whole chain for its community labels — the memo makes that reuse
     * structural (the dd06/coPurchaseLabels discipline). */
-  private val trussMemo = new SessionMemo[DataFrame]
-
   private def trussEdges(s: SparkSession, d: String): DataFrame =
-    trussMemo.getOrCompute(s, d)(Dedup.memoLive) {
+    memo(s, "trussEdges", d) {
       val p = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()

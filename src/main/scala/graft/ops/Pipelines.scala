@@ -19,6 +19,9 @@ import org.apache.spark.sql.expressions.Window
   */
 object Pipelines {
 
+  /** The module's hub memo (see [[SessionMemo]]). */
+  private val memo = new SessionMemo[AnyRef]
+
   /** pp01: the full pipeline; returns (doc_id, split, score) of kept docs. */
   def pp01TrainingPipeline(s: SparkSession, d: String): DataFrame = {
     // run the iterative clustering ONCE (its result frame is cached by
@@ -416,11 +419,12 @@ object Pipelines {
     // benched 3.4 s at sf0.1/local[32]; five per-column distinct
     // aggregates (each a partial-agg'd single-column pipeline over the
     // pruned columnar scan) plus one flat pass for nulls/min/max bench
-    // 1.13 s for the identical output (probe kept in
-    // ProbePp12.scala). At 100 TB the trade holds: five one-column
-    // parquet scans read the same bytes as one five-column scan, each
-    // distinct shuffles only its column's partial-deduped values,
-    // and nothing sextuples the row stream.
+    // 1.13 s for the identical output (a traced graftbench Harness
+    // run of pp12_column_profile records its jobs and stages). At
+    // 100 TB the trade holds: five one-column parquet scans read the
+    // same bytes as one five-column scan, each distinct shuffles only
+    // its column's partial-deduped values, and nothing sextuples the
+    // row stream.
     val flat = l.agg(
       count(lit(1)).as("n_rows"),
       cols.flatMap(c => Seq(
@@ -1473,8 +1477,9 @@ object Pipelines {
   /** The tombstone batch's shared purge GEOMETRY — affected cluster
     * ids, the survivors' self-contained pair set, its reclustering and
     * the safe-member decomposition of that subgraph — MEMOIZED per
-    * (session, dir): pp39's cluster patch, pp45's safe patch and
-    * pp51's policy patch all derive the IDENTICAL frames, and the two
+    * session (the memo key carries the ledger root conf): pp39's
+    * cluster patch, pp45's safe patch and pp51's policy patch all
+    * derive the IDENTICAL frames, and the two
     * propagations inside are EAGER convergence loops whose truncated
     * outputs plain plan-identity caching can never dedupe (every call
     * mints fresh checkpoint RDDs) — the dd06/corpusStanding memo
@@ -1483,11 +1488,8 @@ object Pipelines {
   private[graft] final case class PurgeGeom(affected: DataFrame,
       pairs: DataFrame, recl: DataFrame, safeMembers: DataFrame)
 
-  private val purgeGeomMemo = new SessionMemo[PurgeGeom]
-
   private[graft] def purgeGeom(s: SparkSession, d: String): PurgeGeom =
-    purgeGeomMemo.getOrCompute(s, d)(g =>
-      Dedup.memoLive(g.recl) && Dedup.memoLive(g.safeMembers)) {
+    memo(s, "purgeGeom", d) {
       val tomb = PurgeLedger.table(s, d)
       val clusters = Dedup.dd06DupClusters(s, d)
       val affected = clusters.join(broadcast(tomb), Seq("doc_id"), "left_semi")
@@ -1672,17 +1674,13 @@ object Pipelines {
     * weekly-batch : 100 TB ratio the production path loads the
     * standing artifact and runs NO standing-side loop at all.) */
   /** Standing-side (source ≠ src0) pair + cluster frames for corpus
-    * `d`, MEMOIZED per (session, dir) — pp43's and pp49's in-query
+    * `d`, MEMOIZED per session — pp43's and pp49's in-query
     * proofs (and publishUpsertedDedup) all derive the IDENTICAL
     * standing clustering, and a warm session must pay its convergence
-    * loop once (the dd06/safe-chain memo discipline; liveness = the
-    * propagation checkpoint's blocks, the pair cache recomputes from
-    * lineage). */
-  private val standingMemo = new SessionMemo[(DataFrame, DataFrame)]
-
+    * loop once (the dd06/safe-chain memo discipline). */
   private[graft] def corpusStanding(s: SparkSession,
       d: String): (DataFrame, DataFrame) =
-    standingMemo.getOrCompute(s, d)(p => Dedup.memoLive(p._2)) {
+    memo(s, "corpusStanding", d) {
       val newIds = Tables.documents(s, d)
         .filter(col("source") === "src0").select(col("doc_id"))
       val pairs = CacheScope.cached(
@@ -1872,16 +1870,14 @@ object Pipelines {
     * upsert ≡ rebuild proof — including welds, where one arrival
     * bridges two standing clusters and the patched keeper table must
     * retire a previously-correct keeper. */
-  /** pp43's affected-side reclustering, MEMOIZED per (session, dir) —
+  /** pp43's affected-side reclustering, MEMOIZED per session —
     * the one eager convergence loop in the upsert proof. The
     * derivation mirrors [[clusterUpsertBoth]]'s internals over the
     * memoized corpusStanding frames (pp43's oracle is dd07's full
     * rebuild, so any drift between the two spellings fails the hash
     * gate immediately). */
-  private val upsertReclMemo = new SessionMemo[DataFrame]
-
   private def corpusUpsertRecl(s: SparkSession, d: String): DataFrame =
-    upsertReclMemo.getOrCompute(s, d)(Dedup.memoLive) {
+    memo(s, "corpusUpsertRecl", d) {
       val pairs = CacheScope.cached(
         Dedup.dd02MinhashLsh(s, d).select(col("d1"), col("d2")))
       val (standingPairs, standingClusters) = corpusStanding(s, d)
@@ -2031,20 +2027,16 @@ object Pipelines {
   /** pp49's shared safe-upsert geometry — the touched cluster ids, the
     * UNTOUCHED subgraph's safe-member decomposition (the standing rows
     * the patch passes through) and the AFFECTED components' safe-member
-    * decomposition — MEMOIZED per (session, dir): the three eager
+    * decomposition — MEMOIZED per session: the three eager
     * convergence loops inside (untouched-chain propagation, affected
     * reclustering, affected supported-core propagation) mint fresh
     * checkpoint RDDs every call, so plain plan-identity caching can
     * never dedupe them across pp49's steady-state runs (the
     * dd06/corpusStanding/purgeGeom memo discipline; the round-11
     * verdict's proof-cost budget item). */
-  private val pp49GeomMemo =
-    new SessionMemo[(DataFrame, DataFrame, DataFrame)]
-
   private def pp49Geom(s: SparkSession,
       d: String): (DataFrame, DataFrame, DataFrame) =
-    pp49GeomMemo.getOrCompute(s, d)(t =>
-      Dedup.memoLive(t._2) && Dedup.memoLive(t._3)) {
+    memo(s, "pp49Geom", d) {
       val scores = Text.tx02QualityScore(s, d)
         .select(col("doc_id"), col("score"))
       val pairs = CacheScope.cached(

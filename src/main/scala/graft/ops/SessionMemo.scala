@@ -3,28 +3,42 @@ package graft.ops
 import java.lang.ref.SoftReference
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Per-(SparkSession, key) memo for frames that are expensive to build
-  * and shared across operators (dd06's converged cluster frame, the
-  * ss22/ss24 walk beam). Replaces the round-8 ConcurrentHashMap keyed
-  * by (session, key), which had two defects (ADVICE r8):
+/** Per-session memo for the shared hub frames that are expensive to
+  * build (dd02's verified pairs, dd06's converged clusters, the walk
+  * beam, the purge geometry, …). Each memoizing module holds ONE
+  * memo and every site goes through one call, `memo(s, name, d) {
+  * build }`; neither the key nor the liveness test is written at the
+  * site.
   *
-  *  - **Session retention**: a strong (session, key) key pinned every
-  *    discarded session (tests and artifact readers call
-  *    `spark.newSession()` freely) plus its checkpoint-backed frames
-  *    for the process lifetime. Here the session key is WEAK (outer
-  *    `WeakHashMap`) and the value is held via `SoftReference` — a
-  *    memoized DataFrame strongly references its own session, so a
-  *    strong value would defeat the weak key (the documented
-  *    WeakHashMap caveat). Once a session is discarded, its entry
-  *    unpins on GC and the ContextCleaner reclaims the frame's
-  *    storage blocks; under heap pressure soft values go first.
-  *  - **Lock scope**: `CHM.compute` held the bin lock for the whole
-  *    multi-job convergence loop, blocking unrelated callers that
-  *    hashed to the same bin. `getOrCompute` runs the compute OUTSIDE
-  *    every lock; a race costs one redundant build (benign — both
-  *    results are equivalent, last put wins), never a stall.
+  *  - **Key** = (site name, dataset dir, every `spark.graft.*` entry
+  *    of `s.conf.getAll`, sorted). A hub therefore follows every graft
+  *    conf it reads, with no per-site list to keep in sync: a
+  *    mid-session change to a conf that only shapes the physical plan
+  *    costs one rebuild, never a stale answer. Spark's own confs stay
+  *    out of the key — `Tables.events` sets
+  *    `spark.sql.legacy.parquet.nanosAsLong` on the caller's session
+  *    on every events read, so keying on Spark confs would give every
+  *    later call a different key from the first.
+  *  - **Liveness** is read off the memoized value: every `LogicalRDD`
+  *    leaf under every DataFrame in it (walking tuples, case classes
+  *    and `Seq`s) must still be stored — persisted, as a
+  *    `localCheckpoint` is until `CacheScope.unpersistAll` drains it
+  *    (its lineage is cut, so drained blocks are unrecoverable), or
+  *    written by a reliable checkpoint (`spark.graft.checkpointDir`),
+  *    whose files survive a drain. A dead value is rebuilt.
+  *
+  * Sessions are held WEAKLY and values SOFTLY: a memoized DataFrame
+  * strongly references its own session, so a strong value would
+  * defeat the weak key (the documented `WeakHashMap` caveat). A
+  * discarded session (`spark.newSession()` is called freely) unpins
+  * on GC and the ContextCleaner reclaims its storage. The build runs
+  * OUTSIDE every lock: a race costs one redundant build (both results
+  * are equivalent, last put wins), never a stall.
   */
 final class SessionMemo[V <: AnyRef] {
   private val bySession =
@@ -40,25 +54,45 @@ final class SessionMemo[V <: AnyRef] {
       m
     }
 
-  /** Serve the memoized value while `live` holds; (re)compute outside
-    * any lock otherwise. */
-  def getOrCompute(s: SparkSession, key: String)(live: V => Boolean)(
-      compute: => V): V = {
+  /** Serve site `name`'s value for dir `d` while it is live under the
+    * session's current graft confs; build it otherwise. `name` must be
+    * unique within the memo, and fixes the value's type. */
+  def apply[T <: V](s: SparkSession, name: String, d: String)(build: => T): T = {
     val m = mapFor(s)
+    val key = SessionMemo.key(s, name, d)
     val ref = m.get(key)
     val cur = if (ref == null) null.asInstanceOf[V] else ref.get()
-    if (cur != null && live(cur)) cur
+    if (cur != null && SessionMemo.live(cur)) cur.asInstanceOf[T]
     else {
-      val v = compute
-      m.put(key, new SoftReference(v))
+      val v = build
+      m.put(key, new SoftReference[V](v))
       v
     }
   }
 
-  /** Entry count for the session (spec hook). */
+  /** Entry count for the session (spec and benchmark hook). */
   private[graft] def size(s: SparkSession): Int =
     bySession.synchronized {
       val m = bySession.get(s)
       if (m == null) 0 else m.size()
     }
+}
+
+object SessionMemo {
+  private def key(s: SparkSession, name: String, d: String): String =
+    s.conf.getAll.iterator.filter(_._1.startsWith("spark.graft.")).toSeq
+      .sorted.map { case (k, v) => s"$k=$v" }
+      .mkString(s"$name\u0000$d\u0000", "\u0000", "")
+
+  private def live(v: Any): Boolean = v match {
+    case df: Dataset[_] =>
+      df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+        .forall(stored)
+    case xs: Iterable[_] => xs.forall(live)
+    case p: Product => p.productIterator.forall(live)
+    case _ => true
+  }
+
+  private def stored(r: RDD[_]): Boolean =
+    r.getStorageLevel != StorageLevel.NONE || r.getCheckpointFile.isDefined
 }

@@ -21,6 +21,9 @@ import org.apache.spark.sql.expressions.Window
   */
 object Similarity {
 
+  /** The module's hub memo (see [[SessionMemo]]). */
+  private val memo = new SessionMemo[AnyRef]
+
   private val dim = 64
   private[graft] val nPlanes = 8
   private[graft] val bitsPerTable = 4
@@ -1070,14 +1073,12 @@ object Similarity {
     * stays in the codegen'd CosineSim; selection in the
     * partial-aggregable top-k, so the post-join shuffle carries ≤3
     * pairs per (query, task). */
-  /** The standing kNN edge table, MEMOIZED per (session, dir) as a
+  /** The standing kNN edge table, MEMOIZED per session as a
     * flat frame: ss18's own steady-state runs, ss22/ss24's walk base
     * and ss26's purge patch all consume the identical build — the
     * dd06/dd02 memo discipline applied to the graph artifact. */
-  private val knnEdgesMemo = new SessionMemo[DataFrame]
-
   def ss18KnnJoin(s: SparkSession, d: String): DataFrame =
-    knnEdgesMemo.getOrCompute(s, d)(Dedup.memoLive) {
+    memo(s, "ss18", d) {
       import Checkpoints.TruncateOps
       GraftFunctions.register(s)
       val cent = CacheScope.cached(centroids(s, d))
@@ -1546,12 +1547,11 @@ object Similarity {
     * ordering alone). Returning the SAME DataFrame object makes the
     * hit structural: payment lands on the first caller
     * (alphabetically ss22 in Bench's sorted sweep), every round.
-    * Liveness = still-persisted (a Verify-style drain unpersists the
-    * cache; rebuild then, don't serve a cold frame to N consumers). */
-  private val walkMemo = new graft.ops.SessionMemo[DataFrame]
+    * A Verify-style drain also kills ss18's truncated leaf inside the
+    * walk's plan, so the memo rebuilds instead of serving a cold frame
+    * to N consumers. */
   private def nswWalkTop8(s: SparkSession, d: String): DataFrame =
-    walkMemo.getOrCompute(s, d)(
-      _.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
+    memo(s, "nswWalkTop8", d) {
       CacheScope.cached(nswWalkTopFrom(s, d, 8, ss18KnnJoin(s, d),
         cellAssignments(s, d).select(col("vec_id"), col("cell"))))
     }

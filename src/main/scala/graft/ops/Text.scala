@@ -12,6 +12,9 @@ import org.apache.spark.sql.expressions.Window
   */
 object Text {
 
+  /** The module's hub memo (see [[SessionMemo]]). */
+  private val memo = new SessionMemo[AnyRef]
+
   private[graft] val stopwords = Seq("the", "a", "of", "and", "to", "in")
 
   private[ops] def tokens: Column = split(trim(col("text")), " ")
@@ -948,18 +951,13 @@ object Text {
     * ends on — tx50 consumes the latter directly, so the vocab build
     * costs no second corpus scan and no re-application of the merges
     * (the trainer already segmented every word type). */
-  /** MEMOIZED per (session, dir): tx45, tx46 and tx50 all train the
+  /** MEMOIZED per session: tx45, tx46 and tx50 all train the
     * IDENTICAL merge chain, and each round's truncation mints fresh
     * checkpoint RDDs per call, so plan-identity caching alone never
     * dedupes the three trainers (the dd06/dd02 memo discipline). */
-  private val bpeMemo = new SessionMemo[(Seq[DataFrame], DataFrame)]
-
   private def bpeChainWithWords(
       s: SparkSession, d: String): (Seq[DataFrame], DataFrame) =
-    bpeMemo.getOrCompute(s, d)(t =>
-      (t._1 :+ t._2).forall(graft.ops.Dedup.memoLive)) {
-      bpeChainWithWordsNow(s, d)
-    }
+    memo(s, "bpeChainWithWords", d)(bpeChainWithWordsNow(s, d))
 
   private def bpeChainWithWordsNow(
       s: SparkSession, d: String): (Seq[DataFrame], DataFrame) = {

@@ -4175,12 +4175,7 @@ class OperatorsSpec extends SparkTestBase {
   test("PurgeLedger serves a production root from conf without a fixture copy") {
     // production points consumers at an EXISTING VersionedCorpus whose
     // own purge history is the ledger — no scratch copy, no planted rule
-    val prod = java.nio.file.Files
-      .createTempDirectory("graft-ledger-prod").toString
-    sources.VersionedCorpus.publish(
-      Tables.documents(spark, sf).select("doc_id", "text"), prod,
-      Some("doc_id"))
-    sources.VersionedCorpus.purgeKeys(spark, prod, "doc_id", Seq(3L, 5L, 8L))
+    val prod = productionLedger(sf, Seq(3L, 5L, 8L))
     spark.conf.set(ops.PurgeLedger.rootConf, prod)
     try {
       assert(ops.PurgeLedger.keys(spark, sf) == Seq(3L, 5L, 8L),
@@ -4584,6 +4579,15 @@ class OperatorsSpec extends SparkTestBase {
       val p4 = ops.Dedup.dd02MinhashLsh(spark, dir).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(p4.subsetOf(p2), "r=4 candidates must be ⊆ r=2's")
+      // and p4 is the r=4 banding itself, not r=2's result served
+      // from the session memo: a fresh session at r=4 agrees
+      val fresh = spark.newSession()
+      fresh.conf.set(ops.Dedup.bandRowsConf, "4")
+      val p4Fresh = ops.Dedup.dd02MinhashLsh(fresh, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val agrees = p4 == p4Fresh
+      assert(agrees, s"r=4 pair set: ${p4.size} pairs in the reused " +
+        s"session, ${p4Fresh.size} in a fresh one (r=2: ${p2.size})")
       // dd31 measures the recall of exactly the banding the conf
       // selected; the planted band-7 mass must sit between dd33's
       // predictions at the bracketing grid points (J=0.70 / 0.75),

@@ -10,17 +10,24 @@ trait SparkTestBase extends AnyFunSuite {
   val sf: String = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Session.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** A production ledger fixture: `d`'s documents published as a fresh
+    * VersionedCorpus with `keys` purged, so its own purge history is
+    * the ledger `spark.graft.ledger.root` serves. Returns the root. */
+  def productionLedger(d: String, keys: Seq[Long]): String = {
+    val prod = java.nio.file.Files
+      .createTempDirectory("graft-ledger-prod").toString
+    sources.VersionedCorpus.publish(
+      Tables.documents(spark, d).select("doc_id", "text"), prod,
+      Some("doc_id"))
+    sources.VersionedCorpus.purgeKeys(spark, prod, "doc_id", keys)
+    prod
   }
 }
