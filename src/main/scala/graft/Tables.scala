@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
@@ -8,6 +9,12 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * (see TESTDATA.md). All loaders return lazy DataFrames; Catalyst pushes
   * filters/projections into the parquet scan, so callers never pay for
   * columns they don't read — essential when `lineitem` is 100 TB.
+  *
+  * A load runs no Spark job: `Sources.readParquet` reads the schema
+  * Spark would infer from the table's footer on the driver. It falls
+  * back to Spark's inference job (and its errors) with `mergeSchema`
+  * on, for a partitioned layout, with no data file, or if the footer
+  * read throws.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,7 +22,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Sources.readParquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")

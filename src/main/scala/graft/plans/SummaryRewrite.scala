@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.sources.Sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, AttributeReference, Coalesce, Literal}
@@ -125,7 +126,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
               mvSource(dir).contains(src)) =>
         // analyze (not optimize) the MV scan — fresh attribute ids,
         // no optimizer recursion
-        val mv = SparkSession.active.read.parquet(dir)
+        val mv = Sources.readParquet(SparkSession.active, dir)
           .queryExecution.analyzed
         val mvOut = mv.output.map(a => a.name -> a).toMap
         val newGroups = agg.groupingExpressions.map {

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -18,8 +19,15 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  def readParquet(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+  /** Parquet with the schema `s.read.parquet` would infer, read from a
+    * footer on the driver instead of by an inference job (see
+    * `GraftParquet.footerSchema` for the file it reads and the cases
+    * that fall back to Spark's own inference). */
+  def readParquet(s: SparkSession, paths: String*): DataFrame =
+    GraftParquet.footerSchema(s, paths) match {
+      case Some(schema) => s.read.schema(schema).parquet(paths: _*)
+      case None => s.read.parquet(paths: _*)
+    }
 
   /** CSV with explicit schema + strict mode (malformed rows fail fast
     * rather than silently nulling — on a pipeline you want the alert). */
@@ -134,7 +142,7 @@ object Sources {
     df.repartitionByRange(nFiles, col(c))
       .sortWithinPartitions(col(c))
       .write.mode("overwrite").parquet(path)
-    val ranges = df.sparkSession.read.parquet(path)
+    val ranges = readParquet(df.sparkSession, path)
       .groupBy(input_file_name().as("f"))
       .agg(min(col(c)).cast("long").as("mn"), max(col(c)).cast("long").as("mx"),
         count(lit(1)).as("rows"))
@@ -231,7 +239,7 @@ object Sources {
       .repartition(col("shard"))
       .sortWithinPartitions(col(c))
       .write.mode("overwrite").partitionBy("shard").parquet(path)
-    val ranges = df.sparkSession.read.parquet(path)
+    val ranges = readParquet(df.sparkSession, path)
       .groupBy(col("shard"))
       .agg(min(col(c)).cast("long").as("mn"), max(col(c)).cast("long").as("mx"),
         count(lit(1)).as("rows"))
@@ -293,7 +301,7 @@ object Sources {
       case (f, mn, mx) if mx >= lo && mn <= hi => f
     }
     val df =
-      if (hit.isEmpty) s.read.parquet(path).filter(lit(false))
+      if (hit.isEmpty) readParquet(s, path).filter(lit(false))
       else s.read.option("basePath", path)
         .parquet(hit.map(f => s"$path/$f"): _*)
     df.filter(col(c) >= lo && col(c) <= hi)

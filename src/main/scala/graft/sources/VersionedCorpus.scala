@@ -4,6 +4,8 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned-corpus read/write surface — "corpus as of version N",
@@ -68,7 +70,7 @@ object VersionedCorpus {
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
       .sortBy(_.getName)
     // footer-only count: parquet row-group metadata, no data scan
-    val written = df.sparkSession.read.parquet(dataDir.getAbsolutePath)
+    val written = Sources.readParquet(df.sparkSession, dataDir.getAbsolutePath)
     val (nRows, statsJson) = statsCol match {
       case Some(c) =>
         import org.apache.spark.sql.functions.{col, count, lit, max, min}
@@ -111,49 +113,48 @@ object VersionedCorpus {
     next
   }
 
-  /** Parsed manifest key-range stats, if the publisher recorded them:
-    * (column, min, max). Driver-side regex over the small manifest —
-    * the tombstoneKeys discipline. */
-  private[graft] def manifestStats(root: String,
-      version: Long): Option[(String, Long, Long)] = {
+  /** A version's manifest, parsed on the driver (it is a few hundred
+    * bytes; reading it through Spark would cost a job per read).
+    * `dir` defaults to `v<version>` for manifests written before the
+    * purge feature recorded it explicitly; `stats` is the key range
+    * (column, min, max) if the publisher recorded one. */
+  private case class Manifest(dir: String, files: Seq[String], nRows: Long,
+      stats: Option[(String, Long, Long)])
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def readManifest(root: String, version: Long): Option[Manifest] = {
     val path = new File(versionsDir(root), s"v$version.json")
     if (!path.isFile) None
     else {
-      val txt = new String(Files.readAllBytes(path.toPath),
-        StandardCharsets.UTF_8)
-      """"stats":\{"col":"(\w+)","min":(-?\d+),"max":(-?\d+)\}""".r
-        .findFirstMatchIn(txt)
-        .map(m => (m.group(1), m.group(2).toLong, m.group(3).toLong))
+      val m = json.readTree(path)
+      val stats = Option(m.get("stats")).map(st =>
+        (st.get("col").asText, st.get("min").asLong, st.get("max").asLong))
+      Some(Manifest(Option(m.get("dir")).fold(s"v$version")(_.asText),
+        m.get("files").elements.asScala.map(_.get("file").asText).toSeq,
+        m.get("n_rows").asLong, stats))
     }
   }
 
-  /** Parsed manifest: (data dir name, file names, n_rows). `dir`
-    * defaults to `v<version>` for manifests written before the purge
-    * feature recorded it explicitly. */
-  private def manifest(spark: SparkSession, root: String,
-      version: Long): (String, Seq[String], Long) = {
-    val path = new File(versionsDir(root), s"v$version.json")
-    require(path.isFile, s"version $version not published under $root")
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("version", LongType), StructField("dir", StringType),
-      StructField("n_files", LongType),
-      StructField("n_rows", LongType), StructField("n_bytes", LongType),
-      StructField("files", ArrayType(StructType(Seq(
-        StructField("file", StringType), StructField("bytes", LongType)))))))
-    val row = spark.read.schema(schema).json(path.getAbsolutePath).head()
-    val dir = Option(row.getString(1)).getOrElse(s"v$version")
-    val files = row.getSeq[org.apache.spark.sql.Row](5).map(_.getString(0))
-    (dir, files, row.getLong(3))
+  /** Parsed manifest key-range stats, if the publisher recorded them:
+    * (column, min, max). */
+  private[graft] def manifestStats(root: String,
+      version: Long): Option[(String, Long, Long)] =
+    readManifest(root, version).flatMap(_.stats)
+
+  private def manifest(root: String, version: Long): Manifest = {
+    val m = readManifest(root, version)
+    require(m.isDefined, s"version $version not published under $root")
+    m.get
   }
 
   /** The corpus exactly as of `version`: loads only the files that
     * version's manifest lists. */
   def readAt(spark: SparkSession, root: String, version: Long): DataFrame = {
-    val (dir, files, _) = manifest(spark, root, version)
-    val paths = files.map(f =>
-      new File(new File(new File(root, "_data"), dir), f).getAbsolutePath)
-    spark.read.parquet(paths: _*)
+    val m = manifest(root, version)
+    val paths = m.files.map(f =>
+      new File(new File(new File(root, "_data"), m.dir), f).getAbsolutePath)
+    Sources.readParquet(spark, paths: _*)
   }
 
   def readLatest(spark: SparkSession, root: String): DataFrame =
@@ -163,7 +164,7 @@ object VersionedCorpus {
   /** Audit row count a version's manifest promises (reconcile against
     * `readAt(...).count()` — the graft-manifest completeness pattern). */
   def manifestRows(spark: SparkSession, root: String, version: Long): Long =
-    manifest(spark, root, version)._3
+    manifest(root, version).nRows
 
   // ------------------------------------------------------------------
   // Retention: soft delete, GDPR purge, garbage collection
@@ -214,7 +215,7 @@ object VersionedCorpus {
       }
       if (hit) {
         val snap = readAt(spark, root, v)
-        val (oldDir, _, _) = manifest(spark, root, v)
+        val oldDir = manifest(root, v).dir
         val dataRoot = new File(root, "_data")
         val gen = Iterator.from(1)
           .find(g => !new File(dataRoot, s"v${v}p$g").exists()).get
@@ -270,7 +271,7 @@ object VersionedCorpus {
     * (dirs removed, bytes freed). */
   def gc(spark: SparkSession, root: String): (Long, Long) = {
     val referenced = versions(root)
-      .map(v => manifest(spark, root, v)._1).toSet
+      .map(v => manifest(root, v).dir).toSet
     val dataRoot = new File(root, "_data")
     val orphans = Option(dataRoot.listFiles()).getOrElse(Array.empty[File])
       .filter(d => d.isDirectory && !referenced(d.getName))

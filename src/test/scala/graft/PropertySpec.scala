@@ -14,15 +14,22 @@ class PropertySpec extends AnyFunSuite {
 
   test("GraftDataset private-API bridge is pinned to the verified Spark line") {
     // GraftDataset reaches two private[sql] members
-    // (classic.Dataset.ofRows, classic.ExpressionUtils.column) that a
-    // Spark upgrade can break SILENTLY (signatures drift, behavior
-    // changes, no compile error from the org.apache.spark.sql.graft
-    // namespace trick). Fence: fail loudly on any version outside the
-    // verified 4.1.x line so the bridge is re-verified, not trusted.
+    // (classic.Dataset.ofRows, classic.ExpressionUtils.column) and
+    // GraftParquet two private[parquet] ones
+    // (ParquetFileFormat.readParquetFootersInParallel / readSchema, plus
+    // the summary-first footer choice it copies from schema inference),
+    // all verified against Spark 4.1.2. A Spark upgrade can break them
+    // SILENTLY (signatures drift, behavior changes, no compile error
+    // from the package-namespace trick). Fence: fail loudly on any
+    // version outside the verified 4.1.x line so the bridges are
+    // re-verified, not trusted.
     assert(org.apache.spark.SPARK_VERSION.startsWith("4.1."),
       s"Spark ${org.apache.spark.SPARK_VERSION}: re-verify the " +
         "GraftDataset private-API bridge (ofRows / ExpressionUtils.column) " +
-        "against this version, then bump the pin here and in its scaladoc")
+        "and the GraftParquet footer bridge (ParquetFileFormat." +
+        "readParquetFootersInParallel / readSchema; TableReadSpec checks " +
+        "its schemas against spark.read.parquet) against this version, " +
+        "then bump the pin here and in their scaladocs")
   }
 
   test("TopKAggregator equals sort-and-take for any input in any order") {
